@@ -48,6 +48,16 @@ def _norm_spark_sql(a: str) -> str:
     )
 
 
+def sq_l2_spark_sql(a: str, b: str) -> str:
+    """Squared L2 distance as Spark-SQL text, for callers that embed it
+    in a larger parsed expression (a codebook lambda over ``c.cvec``)."""
+    return (
+        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
+        f"CAST({b} AS ARRAY<DOUBLE>), (x, y) -> (x - y) * (x - y)), "
+        f"0D, (acc, x) -> acc + x)"
+    )
+
+
 def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
 
@@ -79,6 +89,12 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     a = F.expr(a) if isinstance(a, str) else a
     b = F.expr(b) if isinstance(b, str) else b
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def sq_l2(a: str, b: str) -> Column:
+    """Squared L2 distance between two array columns, named by SQL
+    expression (folded left to right like ``dot``)."""
+    return F.expr(sq_l2_spark_sql(a, b))
 
 
 def cosine_spark_sql(a: str, b: str) -> str:

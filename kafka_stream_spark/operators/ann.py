@@ -1,18 +1,17 @@
 """Reusable IVF approximate-nearest-neighbor search.
 
-Round-6 extraction of the scale path the round-5 verdict asked for
-("What's wrong" #3): the kNN-family queries (q_knn_classify X278,
-q_hard_negatives X231) generated candidates by brute-force
-corpus×queries scoring — O(|Q|·n) pairs, quadratic at a fixed sample
-fraction — while the scale-safe IVF routing lived only inline in
-q_ann_ivf/q_ivfpq_recall.  This module is the parameterized operator
-both paths share (the operators/semdedup.py precedent): a coarse
-quantizer partitions the corpus into inverted lists, queries probe
-their ``nprobe`` nearest centroids, and exact cosine re-ranking runs
-only inside the probed lists.  With ``n_centroids ~ sqrt(n)`` the
-assignment pass is O(n·sqrt(n)) map-side work against a broadcast
-codebook and each query scores ~nprobe·sqrt(n) candidates — never the
-corpus.
+The kNN-family queries share this parameterized operator instead of
+scoring corpus×queries brute force: a coarse quantizer partitions the
+corpus into inverted lists, queries probe their ``nprobe`` nearest
+centroids, and exact cosine re-ranking runs only inside the probed
+lists.  With ``n_centroids ~ sqrt(n)`` the assignment pass is
+O(n·sqrt(n)) map-side work against a broadcast codebook and each query
+scores ~nprobe·sqrt(n) candidates — never the corpus.
+
+Codebook assignment and probing are the broadcast-codebook primitives
+of operators/semdedup.py (``with_codebook`` + ``probe_sql``), the one
+module that folds codebooks and ranks centroids; this module only maps
+its (c_id, c_emb) contract onto them.
 
 Everything is deterministic so the DuckDB twin (``ivf_search_sql``)
 replays the identical routing: centroid selection is a modulus rule
@@ -37,6 +36,7 @@ from pyspark.sql.window import Window
 
 from ..functions import vectors
 from ..session import default_parallelism
+from .semdedup import probe_sql, train_centroids, with_codebook
 
 
 def deterministic_centroids(
@@ -52,29 +52,19 @@ def deterministic_centroids(
     )
 
 
-def _cent_array(centroids: DataFrame):
-    """Codebook folded to ONE array column (c_id, c_emb structs) for the
-    per-row assignment/probe expressions below — broadcast exactly like
-    the joined codebook was, same size constraint."""
-    return F.broadcast(
-        centroids.agg(
-            F.collect_list(F.struct("c_id", "c_emb")).alias("_cents")
-        )
+def _probe(
+    df: DataFrame, centroids: DataFrame, vec: str, nprobe: int | None = None
+) -> DataFrame:
+    """``df`` + ``centroid_id``: the best-cosine centroid of ``vec``,
+    or with ``nprobe`` one row for each of its ``nprobe`` best."""
+    book = centroids.select(
+        F.col("c_id").alias("cid"), F.col("c_emb").alias("cvec")
     )
-
-
-#: per-centroid (negated-score, c_id) struct inside a lambda over the
-#: folded codebook: struct ordering ASC == (rounded cosine DESC, c_id
-#: ASC), the exact window order the r12 form used.  nanvl maps a NaN
-#: cosine (0-norm vector, 0/0) to -Infinity so it still sorts FIRST —
-#: Spark's desc ordering treats NaN as largest, and negation alone
-#: would leave NaN sorting last instead.
-def _scored_struct_sql(vec_sql: str) -> str:
-    cos = vectors.cosine_spark_sql(vec_sql, "c.c_emb")
-    return (
-        f"struct(nanvl((-round({cos}, 6)), "
-        f"CAST('-Infinity' AS DOUBLE)) AS ns, c.c_id AS c_id)"
-    )
+    if nprobe is None:
+        cell = f"{probe_sql(vec)}.cid"
+    else:
+        cell = f"explode(transform({probe_sql(vec, nprobe)}, s -> s.cid))"
+    return with_codebook(df, book, "centroid_id", cell)
 
 
 def ivf_assign(
@@ -90,24 +80,8 @@ def ivf_assign(
     # shuffle is paid once per corpus inside the persisted index build
     # (guide §2.6). Round-robin repartition does not affect the result:
     # assignment is a per-row argmax with rounded-score/c_id tie-breaks.
-    #
-    # Round 13 (guide §2.3/§2.4): the argmax itself is now a per-row
-    # array_min over the broadcast codebook folded to ONE array — the
-    # r12 form expanded every corpus row k_centroid ways and sorted the
-    # expansion through a (n_id)-keyed window exchange (~k·n rows with
-    # the embedding payload); this computes the same (rounded cosine
-    # DESC, c_id ASC) argmax inside the scan stage with NO exchange.
-    return (
-        corpus.repartition(default_parallelism())
-        .crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                f"array_min(transform(_cents, "
-                f"c -> {_scored_struct_sql('emb')})).c_id"
-            ),
-        )
-        .drop("_cents")
+    return _probe(
+        corpus.repartition(default_parallelism()), centroids, "emb"
     )
 
 
@@ -148,28 +122,11 @@ def ivf_search(
     # with both centroids and assigned supplied (the persisted-index
     # path, ivf_search_indexed), corpus may be None — it is never read
 
-    # top-nprobe routing as a per-row expression over the folded
-    # codebook (round 13): array_sort's struct ordering reproduces the
-    # (rounded cosine DESC, c_id ASC) window order, so slice+explode
-    # yields the identical probe rows with NO window exchange.  The
-    # query side is fanned out FIRST — the per-row |centroids|·dim
+    # the query side is fanned out FIRST: the per-row |centroids|·dim
     # scoring would otherwise run inside the single-split scan task
-    # (§2.6) — which also keeps the downstream re-rank join stage at
-    # full width (the r12 probes.repartition served that role).
-    probes = (
-        queries.repartition(default_parallelism())
-        .crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform(_cents, "
-                    f"c -> {_scored_struct_sql('q_emb')})), 1, {int(nprobe)}), "
-                    f"s -> s.c_id)"
-                )
-            ),
-        )
-        .drop("_cents")
+    # (§2.6), and it keeps the re-rank join stage at full width
+    probes = _probe(
+        queries.repartition(default_parallelism()), centroids, "q_emb", nprobe
     )
 
     cand = (
@@ -283,8 +240,6 @@ def train_codebook(corpus: DataFrame, k: int, iters: int = 2) -> DataFrame:
     contract. Callers pass k ~ sqrt(n) so IVF assignment is O(n·√n)
     and probed lists hold ~√n candidates — the scaling SemDeDup uses
     for its 50k-centroid LAION codebook."""
-    from .semdedup import train_centroids
-
     e = corpus.select(
         F.col("n_id").alias("vec_id"), F.col("emb").cast("array<double>").alias("emb")
     )
@@ -682,35 +637,6 @@ def routed_candidates(
     Input contracts: members (n_id, emb, *extras), queries (q_id,
     q_emb, *extras), centroids (c_id, c_emb). Output: one row per
     candidate pair with both sides' columns."""
-    # per-row argmax over the folded codebook (round 13) — same
-    # (rounded cosine DESC, c_id ASC) assignment with no window
-    assigned = (
-        members.crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.expr(
-                f"array_min(transform(_cents, "
-                f"c -> {_scored_struct_sql('emb')})).c_id"
-            ),
-        )
-        .drop("_cents")
-    )
-    # top-nprobe routing as a per-row expression over the folded
-    # codebook (round 13): array_sort's struct ordering reproduces the
-    # (rounded cosine DESC, c_id ASC) window order, so slice+explode
-    # yields the identical probe rows with NO window exchange.
-    probes = (
-        queries.crossJoin(_cent_array(centroids))
-        .withColumn(
-            "centroid_id",
-            F.explode(
-                F.expr(
-                    f"transform(slice(array_sort(transform(_cents, "
-                    f"c -> {_scored_struct_sql('q_emb')})), 1, {int(nprobe)}), "
-                    f"s -> s.c_id)"
-                )
-            ),
-        )
-        .drop("_cents")
-    )
+    assigned = _probe(members, centroids, "emb")
+    probes = _probe(queries, centroids, "q_emb", nprobe)
     return probes.join(assigned, "centroid_id").drop("centroid_id")

@@ -1094,12 +1094,6 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(d, frame_size=64, stride=4)
 
 
-def _sq_dist(a, b):
-    """Squared-L2 distance between two array<double> columns — pure fold."""
-    diffs = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 _KM_DIST_SQL = (
     "list_aggregate(list_transform(range(len(e.embedding)), i -> "
     "pow(CAST(e.embedding[i + 1] AS DOUBLE) - c.cvec[i + 1], 2)), 'sum')"
@@ -1160,44 +1154,20 @@ def q_kmeans_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the inverted lists. Output: per-cluster size, mean assignment
     distance, and a centroid checksum so the oracle verifies both the
     assignment and the update step of both iterations."""
+    from ..operators.semdedup import (
+        assign_clusters,
+        train_centroids,
+        update_centroids,
+    )
+
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-
-    def assign(cent: DataFrame) -> DataFrame:
-        scored = e.crossJoin(F.broadcast(cent)).select(
-            "vec_id",
-            "emb",
-            "cid",
-            F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-        )
-        w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn", "cvec")
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        dims = assigned.select(
-            "cid", F.posexplode("emb").alias("pos", "val")
-        ).groupBy("cid", "pos").agg(F.avg("val").alias("v"))
-        return dims.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
-    )
-    # materialize each trained centroid set once: every later stage
-    # branches from it, and without the checkpoint the full corpus
-    # assignment pass would recompute per consumer
-    cent1 = update(assign(cent0)).localCheckpoint(eager=True)
-    assign2 = assign(cent1).localCheckpoint(eager=True)
-    cent2 = update(assign2)
+    # assign2 feeds both the size/distance rollup and the update, so
+    # it is materialized once
+    assign2 = assign_clusters(e, train_centroids(e, k=8, iters=2))
+    assign2 = assign2.localCheckpoint(eager=True)
+    cent2 = update_centroids(assign2)
     return (
         assign2.groupBy("cid")
         .agg(

@@ -19,8 +19,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import vectors
+from ..operators.semdedup import nearest_sql, train_centroids, with_codebook
 from ..sources.tables import load
-from .llm_ext import _KM_DIST_SQL, _sq_dist
+from .llm_ext import _KM_DIST_SQL
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -628,6 +630,12 @@ def q_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X375/X376 — clustering quality: simplified silhouette + Davies-Bouldin
 # ---------------------------------------------------------------------------
 
+def _l2(a: str, b: str) -> str:
+    """L2 (not squared) distance as SQL: these two keys rank and score
+    by round(sqrt(d), 6), which can tie differently from round(d, 6)."""
+    return f"sqrt({vectors.sq_l2_spark_sql(a, b)})"
+
+
 _CLUSTER_ORACLE_PREFIX = f"""
     WITH unn AS (
       SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS val,
@@ -693,55 +701,16 @@ def q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
+    # the two nearest centroids by (rounded L2, cid): the first is the
+    # own cluster (a), the second's distance is the nearest OTHER (b)
+    near = with_codebook(
+        e, train_centroids(e, k=8, iters=2), "r", nearest_sql("emb", 2, _l2)
     )
-    scored1 = e.crossJoin(F.broadcast(cent0)).select(
-        "vec_id",
-        "emb",
-        "cid",
-        F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    assign1 = (
-        scored1.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "emb")
-    )
-    cent1 = (
-        assign1.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-    )
-    scored2 = e.crossJoin(F.broadcast(cent1)).select(
-        "vec_id",
-        "cid",
-        F.round(F.sqrt(_sq_dist(F.col("emb"), F.col("cvec"))), 6).alias(
-            "dist"
-        ),
-    ).localCheckpoint(eager=True)
-    own = (
-        scored2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("cid").alias("own_cid"), F.col("dist").alias("a"))
-    )
-    other = (
-        scored2.join(own, "vec_id")
-        .filter(F.col("cid") != F.col("own_cid"))
-        .groupBy("vec_id")
-        .agg(F.min("dist").alias("b"))
-    )
-    sil = own.join(other, "vec_id").select(
-        F.col("own_cid").alias("cid"),
-        F.when(F.greatest("a", "b") == 0, 0.0)
-        .otherwise((F.col("b") - F.col("a")) / F.greatest("a", "b"))
+    a, b = F.col("r")[0]["dist"], F.col("r")[1]["dist"]
+    sil = near.select(
+        F.col("r")[0]["cid"].alias("cid"),
+        F.when(F.greatest(a, b) == 0, 0.0)
+        .otherwise((b - a) / F.greatest(a, b))
         .alias("s"),
     )
     return sil.groupBy("cid").agg(
@@ -785,45 +754,9 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent0 = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("emb").alias("cvec")
-    )
-    scored1 = e.crossJoin(F.broadcast(cent0)).select(
-        "vec_id",
-        "emb",
-        "cid",
-        F.round(_sq_dist(F.col("emb"), F.col("cvec")), 6).alias("dist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    assign1 = (
-        scored1.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "emb")
-    )
-    cent1 = (
-        assign1.select("cid", F.posexplode("emb").alias("pos", "val"))
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .groupBy("cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("cvec")
-        )
-        .localCheckpoint(eager=True)
-    )
-    scored2 = e.crossJoin(F.broadcast(cent1)).select(
-        "vec_id",
-        "cid",
-        F.round(F.sqrt(_sq_dist(F.col("emb"), F.col("cvec"))), 6).alias(
-            "dist"
-        ),
-    )
-    own = (
-        scored2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", F.col("dist").alias("a"))
+    cent1 = train_centroids(e, k=8, iters=2)
+    own = with_codebook(e, cent1, "_b", nearest_sql("emb", dist=_l2)).select(
+        F.col("_b.cid").alias("cid"), F.col("_b.dist").alias("a")
     )
     scat = own.groupBy("cid").agg(
         F.count("*").alias("n"), F.avg("a").alias("s")
@@ -836,9 +769,7 @@ def q_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "ci",
             "cj",
-            F.round(
-                F.sqrt(_sq_dist(F.col("va"), F.col("vb"))), 6
-            ).alias("m"),
+            F.round(F.sqrt(vectors.sq_l2("va", "vb")), 6).alias("m"),
         )
     )
     si = scat.select(F.col("cid").alias("ci"), F.col("s").alias("si"))

@@ -2246,134 +2246,28 @@ def q_shard_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X508 — product quantization (PQ) codebook + codes
 # ---------------------------------------------------------------------------
 
-from .llm_ext import _sq_dist  # noqa: E402
+from ..operators.semdedup import (  # noqa: E402
+    assign_clusters,
+    nearest_sql,
+    train_centroids,
+    with_codebook,
+)
 
 _PQ_M = 8  # subspaces
 _PQ_K = 16  # centroids per subspace (4-bit codes)
 
 
-# --- literal-codebook PQ machinery (round-13 optimization) -----------------
-#
-# The PQ/IVF trainers below used to run every nearest-centroid assignment
-# as a 16x broadcast-join expansion + a (vec_id, m) sort-window — ~10
-# small jobs and 4+ exchanges per query (VERDICT r12 next #1).  The
-# codebooks are tiny and DETERMINISTIC (k<=16 per subspace, k=8 coarse),
-# so each trained codebook is collected to the driver (hundreds of rows)
-# and embedded as a folded SQL literal; assignment becomes a pure
-# per-row expression — array_min over struct(round(sq_dist, 6), cid),
-# which reproduces the window's (dist ASC, cid ASC) tie-break exactly
-# (struct ordering is lexicographic) — with NO join, NO window and NO
-# shuffle (guide §1.2/§2.4).  Distances use the identical
-# zip_with/aggregate fold as _sq_dist, against CAST('<repr>' AS DOUBLE)
-# literals (repr round-trips, string->double cast is correctly rounded),
-# so every per-pair value is bit-identical to the joined form.  At
-# corpus scale the collected frames stay codebook-sized (k entries),
-# never data-sized.
-
-
-def _pq_lit_d(v: float) -> str:
-    return f"CAST('{v!r}' AS DOUBLE)"
-
-
-def _pq_sqdist6_sql(vec_sql: str, cvec_sql: str) -> str:
-    """round(_sq_dist(vec, cvec), 6) as SQL — the exact assignment
-    distance (same fold, same rounding) used by the joined form."""
-    return (
-        f"round(aggregate(zip_with({vec_sql}, {cvec_sql}, "
-        f"(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v), 6)"
-    )
-
-
-def _pq_centlist_sql(entries) -> str:
-    """[(cid, [floats])] (ascending cid) -> SQL literal
-    array<struct<cid bigint, cvec array<double>>>."""
-    inner = ",".join(
-        f"named_struct('cid', CAST({int(cid)} AS BIGINT), 'cvec', "
-        f"array({','.join(_pq_lit_d(float(x)) for x in cv)}))"
-        for cid, cv in entries
-    )
-    return f"array({inner})"
-
-
-def _pq_argmin_sql(vec_sql: str, centlist_sql: str) -> str:
-    """Nearest-centroid struct(dist, cid) over a literal codebook:
-    array_min's struct ordering = (dist ASC, cid ASC), identical to the
-    row_number window it replaces."""
-    return (
-        f"array_min(transform({centlist_sql}, "
-        f"c -> struct({_pq_sqdist6_sql(vec_sql, 'c.cvec')} AS dist, "
-        f"c.cid AS cid)))"
-    )
-
-
-def _pq_cents_by_m_sql(cent_by_m) -> str:
-    """{m: [(cid, vec)]} -> SQL literal array indexed by m + 1."""
-    per_m = ",".join(
-        _pq_centlist_sql(sorted(cent_by_m.get(m, [])))
-        for m in range(_PQ_M)
-    )
-    return f"array({per_m})"
-
-
-def _pq_train_cents1(e: DataFrame) -> dict:
-    """One Lloyd round of PQ training, returning the updated per-
-    subspace codebooks as {m: [(cid, [8 doubles])]}.  Init = the
-    subvectors of vec_id < _PQ_K (collected: <=16 rows); assignment is
-    the literal-codebook expression; the update is the SAME
-    posexplode -> (cid, m, pos) avg aggregate as the joined form
-    (identical groups, identical avg), collected at codebook grain."""
-    init_rows = (
-        e.filter(F.col("vec_id") < _PQ_K).select("vec_id", "emb").collect()
-    )
-    cent0 = {
-        m: sorted(
-            (int(r["vec_id"]), list(r["emb"][m * 8 : m * 8 + 8]))
-            for r in init_rows
-        )
-        for m in range(_PQ_M)
-    }
-    cents0_sql = _pq_cents_by_m_sql(cent0)
+def _pq_codes(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """PQ over (vec_id, emb): the per-subspace codebooks (m, cid, cvec)
+    — init = the subvectors of the _PQ_K lowest vec_ids, one Lloyd
+    round — and every vector's codes (vec_id, m, emb, cid, dist), emb
+    being the 8-dim subvector of subspace m."""
     ms = e.sparkSession.range(_PQ_M).select(F.col("id").cast("int").alias("m"))
     subs = e.crossJoin(F.broadcast(ms)).select(
-        "vec_id", "m", F.slice(F.col("emb"), F.col("m") * 8 + 1, 8).alias("sv")
+        "vec_id", "m", F.slice("emb", F.col("m") * 8 + 1, 8).alias("emb")
     )
-    a1 = subs.select(
-        "m",
-        F.expr(_pq_argmin_sql("sv", f"element_at({cents0_sql}, m + 1)"))
-        .getField("cid")
-        .alias("cid"),
-        "sv",
-    )
-    dims = (
-        a1.select("cid", "m", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("cid", "m", "pos")
-        .agg(F.avg("val").alias("v"))
-        .collect()
-    )
-    cent1: dict = {}
-    acc: dict = {}
-    for r in dims:
-        acc.setdefault((int(r["m"]), int(r["cid"])), {})[int(r["pos"])] = float(
-            r["v"]
-        )
-    for (m, cid), by_pos in acc.items():
-        cent1.setdefault(m, []).append(
-            (cid, [by_pos[p] for p in sorted(by_pos)])
-        )
-    for m in cent1:
-        cent1[m].sort()
-    return cent1
-
-
-def _pq_codes_sql(emb_sql: str, cents1_sql: str) -> str:
-    """Per-vector PQ codes in ONE expression: for each subspace m, the
-    nearest updated centroid of slice(emb, m*8+1, 8) — array of
-    struct(dist, cid), m ascending."""
-    vec = f"slice({emb_sql}, m * 8 + 1, 8)"
-    return (
-        f"transform(sequence(0, {_PQ_M - 1}), "
-        f"m -> {_pq_argmin_sql(vec, f'element_at({cents1_sql}, m + 1)')})"
-    )
+    cent = train_centroids(subs, k=_PQ_K, iters=2, key="m")
+    return cent, assign_clusters(subs, cent, key="m")
 
 
 @query(
@@ -2428,10 +2322,10 @@ def _pq_codes_sql(emb_sql: str, cents1_sql: str) -> str:
 def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X508 — product quantization (Jegou et al. 2011, the ANN
     compression standard): the 64-dim embedding splits into M=8
-    subvectors; each subspace trains its own K=4 codebook
+    subvectors; each subspace trains its own K=16 codebook
     (deterministic init = first K vectors' subvectors, one Lloyd
     round) and every vector compresses to an 8-symbol code — 64 floats
-    become 8 small ints (here 2 bits each), the memory step that makes
+    become 8 small ints (here 4 bits each), the memory step that makes
     billion-vector IVF-PQ indexes fit RAM.  Output: per-vector PQ code
     string + quantization error (the sum of per-subspace residuals —
     the quantity recall tuning trades against compression).
@@ -2442,30 +2336,19 @@ def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw vectors; assignment is a broadcast of M*K tiny centroids
     against the subvector stream, exactly the IVF discipline per
     subspace; codes are 8 bytes/vector however large the corpus."""
-    # Round-13 rewrite (VERDICT r12 next #1, guide §1.2/§2.4): the two
-    # assignment passes were each a 16x broadcast-join expansion + a
-    # (vec_id, m) sort-window, and the output rollup a third shuffle.
-    # The codebooks are tiny and deterministic, so training collects
-    # them (literal-codebook machinery above) and BOTH assignments
-    # become pure per-row expressions; the final output is computed at
-    # VECTOR grain in one shuffle-free projection (codes generated in m
-    # order replace the collect_list/array_sort rollup; qerr folds the
-    # same 8 rounded dists in m order).
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    cent1 = _pq_train_cents1(e)
-    codes = _pq_codes_sql("emb", _pq_cents_by_m_sql(cent1))
-    return e.select(
-        "vec_id", F.expr(codes).alias("codes")
-    ).select(
-        "vec_id",
-        F.expr(
-            "array_join(transform(codes, s -> CAST(s.cid AS STRING)), '-')"
+    _, codes = _pq_codes(e)
+    return codes.groupBy("vec_id").agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("m", "cid"))),
+                lambda s: s["cid"].cast("string"),
+            ),
+            "-",
         ).alias("pq_code"),
-        F.expr(
-            "round(aggregate(codes, 0D, (acc, s) -> acc + s.dist), 6)"
-        ).alias("qerr"),
+        F.round(F.sum("dist"), 6).alias("qerr"),
     )
 
 
@@ -2685,80 +2568,26 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     land at nprobe=2 routing recall 10/10 and end-to-end recall@1
     measured by the query itself.
 
-    Scale: routing is broadcast (8 coarse + 32 PQ centroids); the
+    Scale: routing is broadcast (8 coarse + 8x16 PQ centroids); the
     candidate join is cell-keyed (cluster-bounded like X266); ADC
     shuffles (qid, cand, m, code) tuples — 16 bytes/candidate/subspace
     — and the per-query argmin is a rank over candidates only. This is
     the memory layout that serves billion-vector indexes."""
-    # Round-13 rewrite (VERDICT r12 next #1, guide §1.2/§2.4): coarse
-    # k-means, PQ training, corpus encoding, query routing AND the ADC
-    # distance all ran as broadcast-join expansions + sort-windows +
-    # per-(qid, cand, m) groupBy — ~10 small jobs.  Every codebook here
-    # is tiny and deterministic, so each is collected and embedded as a
-    # folded SQL literal (machinery above q_pq_codebook): assignment /
-    # routing / encoding / ADC become per-row expressions, and the only
-    # remaining shuffles are the candidate join and the per-query
-    # top-k windows.  Per-pair arithmetic (zip_with fold, round 6,
-    # (dist, cid) tie-breaks) is identical; ADC folds the same 8
-    # rounded per-subspace distances in m order.
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    # coarse k-means (train_centroids k=8, iters=2 spelling): init = the
-    # 8 lowest vec_ids, one Lloyd round with the same (cid, pos) avg
-    init_rows = e.orderBy("vec_id").limit(8).select("vec_id", "emb").collect()
-    centc0_sql = _pq_centlist_sql(
-        sorted((int(r["vec_id"]), list(r["emb"])) for r in init_rows)
-    )
-    cdims = (
-        e.select(
-            F.expr(_pq_argmin_sql("emb", centc0_sql))
-            .getField("cid")
-            .alias("cid"),
-            F.posexplode("emb").alias("pos", "val"),
-        )
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("v"))
-        .collect()
-    )
-    cacc: dict = {}
-    for r in cdims:
-        cacc.setdefault(int(r["cid"]), {})[int(r["pos"])] = float(r["v"])
-    coarse1_sql = _pq_centlist_sql(
-        sorted(
-            (cid, [by_pos[p] for p in sorted(by_pos)])
-            for cid, by_pos in cacc.items()
-        )
-    )
-    assigned = e.select(
-        "vec_id",
-        F.expr(_pq_argmin_sql("emb", coarse1_sql)).getField("cid").alias("cid"),
-    )
-
-    # PQ training (X508 spelling) + whole-corpus encoding at vector grain
-    cents1_sql = _pq_cents_by_m_sql(_pq_train_cents1(e))
-    pcodes = e.select(
-        "vec_id",
-        F.expr(
-            f"transform({_pq_codes_sql('emb', cents1_sql)}, s -> s.cid)"
-        ).alias("codes"),
-    )
+    coarse = train_centroids(e, k=8, iters=2)
+    assigned = assign_clusters(e, coarse).select("vec_id", "cid")
+    pq_cent, codes = _pq_codes(e)
 
     queries = e.filter(F.col("vec_id") < _IVFPQ_NQ).select(
         F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
     )
-    # nprobe nearest coarse cells per query: array_sort over the scored
-    # literal codebook = the (dist ASC, ccid ASC) window order
-    qprobe = queries.select(
-        "qid",
-        "qemb",
-        F.explode(
-            F.expr(
-                f"transform(slice(array_sort(transform({coarse1_sql}, "
-                f"c -> struct({_pq_sqdist6_sql('qemb', 'c.cvec')} AS dist, "
-                f"c.cid AS cid))), 1, {_IVFPQ_NPROBE}), s -> s.cid)"
-            )
-        ).alias("cid"),
+    qprobe = with_codebook(
+        queries,
+        coarse,
+        "cid",
+        f"explode(transform({nearest_sql('qemb', _IVFPQ_NPROBE)}, s -> s.cid))",
     )
     cand = (
         F.broadcast(qprobe)
@@ -2766,22 +2595,25 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "qemb", F.col("vec_id").alias("cand_id"))
     )
-    # ADC: per-subspace rounded distance of the query's exact subvector
-    # against the candidate code's centroid, folded in m order
-    _adc_lookup = (
-        f"element_at(filter(element_at({cents1_sql}, m + 1), "
-        f"c -> c.cid = element_at(codes, m + 1)), 1).cvec"
-    )
+    # ADC: the query's exact subvector against the centroid its
+    # candidate's code names, looked up by (m, cid) — a centroid with
+    # no members is absent from the codebook, so positions would lie
     adc = (
-        cand.join(pcodes, cand.cand_id == pcodes.vec_id)
-        .select(
-            "qid",
+        cand.join(
+            codes.select(F.col("vec_id").alias("cand_id"), "m", "cid"),
             "cand_id",
-            F.expr(
-                f"round(aggregate(transform(sequence(0, {_PQ_M - 1}), m -> "
-                f"{_pq_sqdist6_sql('slice(qemb, m * 8 + 1, 8)', _adc_lookup)}"
-                f"), 0D, (acc, v) -> acc + v), 6)"
-            ).alias("adist"),
+        )
+        .join(F.broadcast(pq_cent), ["m", "cid"])
+        .groupBy("qid", "cand_id")
+        .agg(
+            F.round(
+                F.sum(
+                    F.round(
+                        vectors.sq_l2("slice(qemb, m * 8 + 1, 8)", "cvec"), 6
+                    )
+                ),
+                6,
+            ).alias("adist")
         )
     )
     wa = Window.partitionBy("qid").orderBy("adist", "cand_id")
@@ -2797,7 +2629,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "cand_id",
-            F.round(_sq_dist(F.col("qemb"), F.col("cemb")), 6).alias("rd"),
+            F.round(vectors.sq_l2("qemb", "cemb"), 6).alias("rd"),
         )
     )
     wr = Window.partitionBy("qid").orderBy("rd", "cand_id")
@@ -2813,7 +2645,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "oid",
-            F.round(_sq_dist(F.col("qemb"), F.col("oemb")), 6).alias("d"),
+            F.round(vectors.sq_l2("qemb", "oemb"), 6).alias("d"),
         )
     )
     we = Window.partitionBy("qid").orderBy("d", "oid")
