@@ -24,7 +24,7 @@ side broadcasts (it is tiny) and the stream side never shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 OR_SEP = "、"
@@ -74,7 +74,7 @@ def veto_only(title: Column, filter_rules: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Driver-compiled predicates — the join-condition-safe form.
+# Driver-compiled join condition — the join-condition-safe form.
 #
 # Spark 4.x has a fresh-session bug with higher-order-function lambdas in a
 # JOIN condition: when the stream-side attribute holds a low exprId (text#1
@@ -95,54 +95,68 @@ def veto_only(title: Column, filter_rules: Column) -> Column:
 # boolean tree with zero lambdas, immune to the collision, and still pure
 # whole-stage-codegen (contains over literals). At 100 TB the work is
 # identical to the HOF form: BroadcastNestedLoopJoin evaluates ~K literal
-# substring tests per fact row, the fact side never shuffles.
+# substring tests per fact row, the fact side never shuffles. The tree is
+# rendered as ONE SQL string and parsed once (``F.expr``): building it from
+# Column calls cost ~200 py4j round trips per query start.
 # ---------------------------------------------------------------------------
 
 
 def parse_rule_py(in_rules: str, filter_rules: str) -> tuple[list[list[str]], list[str]]:
     """Driver-side parse with semantics identical to :func:`parse_in_rules` /
-    :func:`parse_filter_rules` (OR-groups stripped, AND-parts not; empty
-    filter keywords dropped)."""
-    groups = [g.strip().split(AND_SEP) for g in in_rules.split(OR_SEP)]
+    :func:`parse_filter_rules` (OR-groups stripped of spaces like SQL
+    ``trim``, AND-parts not; empty filter keywords dropped)."""
+    groups = [g.strip(" ").split(AND_SEP) for g in in_rules.split(OR_SEP)]
     vetoes = [kw for kw in filter_rules.split(OR_SEP) if kw != ""]
     return groups, vetoes
 
 
-def compile_match(title: Column, in_rules: str, filter_rules: str) -> Column:
-    """Literal-predicate form of :func:`rule_matches` for ONE known rule."""
-    groups, vetoes = parse_rule_py(in_rules, filter_rules)
-    included = None
-    for grp in groups:
-        conj = None
-        for kw in grp:
-            t = title.contains(F.lit(kw))
-            conj = t if conj is None else (conj & t)
-        included = conj if included is None else (included | conj)
-    cond = included
-    for kw in vetoes:
-        cond = cond & ~title.contains(F.lit(kw))
-    return cond
+def _sql_str(s: str) -> str:
+    """Spark SQL string literal (default parser: backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def compiled_join_cond(title: Column, rule_id: Column, rule_rows) -> Column:
-    """Join condition for fact ⋈ rules as a CASE chain on the rule key.
+def match_sql(title: str, rule_rows) -> str:
+    """Join condition for fact ⋈ rules as ONE SQL CASE chain on the rule key.
 
-    ``rule_rows`` is an iterable of (rule_id, in_rules, filter_rules)
-    collected from the (tiny) rules dim. The CASE-on-primary-key shape
-    (WHEN rule_id = k THEN <literal match for rule k>) evaluates ONLY
-    the paired rule's keywords per (fact, rule) pair — same per-pair
-    work as the HOF form it replaces; an OR-of-branches form would
-    evaluate every rule's keywords per pair (measured 1.6× slower at
-    sf0.1). Lambda-free theta-join condition (J3)."""
-    cond = None
+    ``title`` names the fact-side text column; ``rule_rows`` is an iterable
+    of (rule_id, in_rules, filter_rules) collected from the (tiny) rules
+    dim, whose key column is ``rule_id``. The CASE-on-primary-key shape
+    (WHEN rule_id = k THEN <literal match for rule k>) evaluates ONLY the
+    paired rule's keywords per (fact, rule) pair — same per-pair work as
+    the HOF form; an OR-of-branches form would evaluate every rule's
+    keywords per pair (measured 1.6× slower at sf0.1). ``rule_id`` is the
+    dim's key: rows sharing a key all use the first such row's keywords.
+    A rule with a NULL ``in_rules`` or ``filter_rules`` never matches (the
+    HOF and DuckDB forms yield NULL there); zero rules give ``false`` — an
+    empty join, as the oracle's inner join. Lambda-free theta-join
+    condition (J3)."""
+    t = f"`{title}`"
+    branches = []
     for rid, in_rules, filter_rules in rule_rows:
-        match = compile_match(title, in_rules, filter_rules)
-        cond = (
-            F.when(rule_id == F.lit(rid), match)
-            if cond is None
-            else cond.when(rule_id == F.lit(rid), match)
+        if in_rules is None or filter_rules is None:
+            continue
+        key = "IS NULL" if rid is None else f"= {int(rid)}"
+        groups, vetoes = parse_rule_py(in_rules, filter_rules)
+        included = " OR ".join(
+            "(" + " AND ".join(f"contains({t}, {_sql_str(kw)})" for kw in grp) + ")"
+            for grp in groups
         )
-    return cond.otherwise(F.lit(False))
+        vetoed = "".join(f" AND NOT contains({t}, {_sql_str(kw)})" for kw in vetoes)
+        branches.append(f"WHEN `rule_id` {key} THEN ({included}){vetoed}")
+    if not branches:
+        return "false"
+    return "CASE " + " ".join(branches) + " ELSE false END"
+
+
+def rule_join(facts: DataFrame, rules_df: DataFrame, title: str) -> DataFrame:
+    """``facts`` ⋈ broadcast(``rules_df``): one row per (fact, matching rule).
+
+    Collects the rules dim's keyword columns (no job for the driver-local
+    :mod:`sources.dims` relation; a file-backed dim is read once, here)
+    and joins on the compiled :func:`match_sql` condition."""
+    rule_rows = rules_df.select("rule_id", "in_rules", "filter_rules").collect()
+    cond = F.expr(match_sql(title, rule_rows))
+    return facts.join(F.broadcast(rules_df), cond, "inner")
 
 
 # ---------------------------------------------------------------------------

@@ -374,13 +374,7 @@ def q_rule_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-side conjunct into the broadcast side (see functions/rules.py;
     pinned by tests/test_cold_session.py)."""
     d = load(spark, sf_dir, "documents")
-    r = dims.rules_df(spark)
-    rule_rows = [
-        (row.rule_id, row.in_rules, row.filter_rules)
-        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
-    ]
-    cond = rules.compiled_join_cond(d["text"], r["rule_id"], rule_rows)
-    return d.join(F.broadcast(r), cond, "inner").select(
+    return rules.rule_join(d, dims.rules_df(spark), "text").select(
         "doc_id", "rule_id", "category_code", "category_name", "sentiment", "importance"
     )
 

@@ -35,36 +35,25 @@ def enrich(d: DataFrame, spark: SparkSession, cfg: BoardConfig = NEEQ) -> DataFr
     streaming one — every operator here (broadcast joins, projections) is
     streaming-compatible, which is the point of expressing the reference's
     per-record loop declaratively (Structured Streaming runs the same plan
-    per micro-batch; the dims are re-resolved each batch = SURVEY.md T2)."""
+    per micro-batch; the dims are driver-local, captured at query start)."""
     # J1: broadcast dim lookup; LEFT + coalesce('') fixes the reference's
     # stale-carry-over on lookup miss (SURVEY.md §1.4) into explicit default
     sites = dims.sites_df(spark)
-    d = d.join(F.broadcast(sites), "source", "left").withColumn(
-        "site_name", decode.default_empty(F.col("site_name"))
-    )
-    # J3: rule classification — one output row per matching rule. The
-    # condition is driver-compiled from the collected (tiny) rules dim:
-    # HOF lambdas in a join condition hit a fresh-session exprId collision
-    # (functions/rules.py compiled_join_cond docstring; tests/test_cold_session.py).
-    r = dims.rules_df(spark)
-    rule_rows = [
-        (row.rule_id, row.in_rules, row.filter_rules)
-        for row in r.select("rule_id", "in_rules", "filter_rules").collect()
-    ]
-    cond = rules.compiled_join_cond(d["title"], r["rule_id"], rule_rows)
-    m = d.join(F.broadcast(r), cond, "inner")
+    d = d.join(F.broadcast(sites), "source", "left")
+    # J3: rule classification — one output row per matching rule, on the
+    # lambda-free compiled condition (HOF lambdas in a join condition hit
+    # a fresh-session exprId collision: functions/rules.py match_sql;
+    # tests/test_cold_session.py).
+    m = rules.rule_join(d, dims.rules_df(spark), "title")
     # P4-P8: keys + decodes; P7/P9/P10: literals, defaults, wide assembly
+    site_name = decode.default_empty(F.col("site_name"))
     yqid = keys.surrogate_key(F.col("title"), F.col("source"), F.col("doc_id"))
-    m = m.withColumn("yqid", yqid).withColumn(
-        "only_id",
-        keys.surrogate_key(F.col("yqid"), F.col("site_name"), F.col("category_code")),
-    )
     return m.select(
         "doc_id",
-        "yqid",
-        "only_id",
+        yqid.alias("yqid"),
+        keys.surrogate_key(yqid, site_name, F.col("category_code")).alias("only_id"),
         "title",
-        "site_name",
+        site_name.alias("site_name"),
         F.col("lang").alias("lang_code"),
         "rule_id",
         "category_code",

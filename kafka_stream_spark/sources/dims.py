@@ -9,8 +9,14 @@ Stand-ins for the reference's MySQL dimension tables, with the same shape:
 - site dim ~ ``EI_BDP.A_stock_code_name_fyi`` names dict
   (kafka_s.py:132-137): a tiny code→name broadcast lookup.
 
-Both are broadcast in every plan that joins them: on a 1000-executor
-cluster the dim ships once per executor, the fact side never shuffles.
+Both are driver-local relations: built from pandas with Arrow on (as
+``session.RUNTIME_CONFS`` sets it), ``createDataFrame`` yields a
+``LocalRelation``, so collecting the rules and broadcasting either dim
+read rows already on the driver — no scan job per plan or per
+micro-batch. With Arrow off it falls back to a scanned RDD with the same
+rows and schema. Both are broadcast in every plan that joins them: on
+a 1000-executor cluster the dim ships once per executor, the fact side
+never shuffles.
 ``as_values_sql`` renders the same rows as a DuckDB VALUES clause so the
 oracle runs on literally identical dimension data.
 """
@@ -18,6 +24,7 @@ oracle runs on literally identical dimension data.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # (rule_id, in_rules, filter_rules, category_code, category_name,
 #  sentiment, importance)
@@ -44,12 +51,25 @@ SITES_ROWS: list[tuple] = [(f"src{i}", f"站点{i}") for i in range(10)]
 SITES_COLS = ("source", "site_name")
 
 
+_TYPES = {int: T.LongType(), str: T.StringType()}
+
+
+def _local_df(spark: SparkSession, rows: list[tuple], cols: tuple[str, ...]) -> DataFrame:
+    """Nullable LongType/StringType columns typed from the first row."""
+    import pandas as pd  # lazily: ~0.3 s of every package import otherwise
+
+    schema = T.StructType(
+        [T.StructField(c, _TYPES[type(v)], True) for c, v in zip(cols, rows[0])]
+    )
+    return spark.createDataFrame(pd.DataFrame(rows, columns=list(cols)), schema=schema)
+
+
 def rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(RULES_ROWS, schema=list(RULES_COLS))
+    return _local_df(spark, RULES_ROWS, RULES_COLS)
 
 
 def sites_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SITES_ROWS, schema=list(SITES_COLS))
+    return _local_df(spark, SITES_ROWS, SITES_COLS)
 
 
 def _sql_lit(v) -> str:
